@@ -74,24 +74,31 @@ def synth_aliases(docs: DataFrame) -> DataFrame:
 def kg_canonical_triples(pages: DataFrame, table: Table, aliases: DataFrame,
                          mode: str = MODE_MINIMAL,
                          cache_registry: Optional[list] = None):
-    """Stages A-D as DataFrames (no materialization): returns
-    (canonical_triples, entity_map, observation, cell_errors).
+    """Stages A-D: returns (canonical_triples, entity_map, observation,
+    cell_errors).
 
     cell_errors is the compiled path's per-cell error side-output
     (url, row, col_ix, col_name, message) -- the reference's
     ConversionResult.Errors channel (Rdf/Converter.cs:456-461) as a
     DataFrame the caller can materialize next to the graph tables.
 
-    The triples and sameAs-edge DataFrames are persisted
-    (MEMORY_AND_DISK): triples feed three consumers (linking, the
-    canonical rewrite, the final sink) and the edges feed the CC seed
-    checkpoint plus the canonical-URI derivation - without the persist
-    each consumer recomputes the whole extraction, ~3-5x the A+B cost
-    (measured 40 s -> ~20 s at sf0.1). At 100 TB a spilled persist of the
-    triples costs about one extra write of the stage output - far below
-    re-running extraction per consumer. Pass `cache_registry` (a list) to
-    receive the persisted handles for unpersisting once every consumer
-    has materialized (build_knowledge_graph does)."""
+    What runs here and what stays lazy:
+    * the triples and the sameAs-edge frames are LAZY local checkpoints:
+      the plan is cut at once, the rows are computed by the first action
+      that needs them (the CC input checkpoint) and pinned for every
+      later consumer (linking, the canonical rewrite, the final sink)
+      instead of re-running extraction per consumer;
+    * connected components runs its rounds as eager checkpoints;
+    * entity_map is an EAGER local checkpoint: it has three consumers
+      (the broadcast-policy count, the broadcast side of the triples
+      rewrite and the caller's entities write), and each would otherwise
+      recompute its CC-label join and grouping shuffles.
+    canonical_triples and cell_errors are returned unexecuted.
+
+    Checkpointed blocks are freed when their DataFrames are garbage
+    collected. `cache_registry` (a list) receives the triples and edge
+    handles for API compatibility; calling `unpersist()` on them does
+    nothing, because a local checkpoint is not in the cache manager."""
     from .operators.triples import convert_table_group_spark_with_errors
 
     # A+B: extraction + conversion (narrow)
@@ -127,7 +134,8 @@ def kg_canonical_triples(pages: DataFrame, table: Table, aliases: DataFrame,
     canon = (comp.groupBy("component")
              .agg(F.min("uri").alias("canonical_uri")))
     entity_map = comp.join(canon, "component").select(
-        "node", "uri", "component", "canonical_uri")
+        "node", "uri", "component", "canonical_uri") \
+        .localCheckpoint(eager=True)
 
     canonical_triples = canonicalize_triples(
         triples, entity_map.select("node", F.col("canonical_uri")
@@ -191,7 +199,7 @@ def curate_documents(docs: DataFrame, text_col: str = "text",
     with_metrics=False runs ZERO jobs here; the same persists are set up
     lazily so the caller's first action executes each stage once. Pass
     `cache_registry` (a list) to receive every still-persisted handle
-    for unpersisting when done (same contract as kg_canonical_triples);
+    for unpersisting when done;
     intermediates are always released here. Cache policy (review fix -
     plain calls must not leak): with neither metrics nor a registry,
     NOTHING is persisted (the pre-round-4 behavior); with metrics but no
@@ -300,9 +308,8 @@ def build_knowledge_graph(spark: SparkSession, pages: DataFrame, table: Table,
       output_dir/entities/  (node, component, canonical_uri)
       output_dir/_manifests under each table dir (commit records)
     """
-    caches: list = []
     canonical_triples, entity_map, obs, errors = kg_canonical_triples(
-        pages, table, aliases, mode=mode, cache_registry=caches)
+        pages, table, aliases, mode=mode)
 
     # E: materialize with lineage (graph tables + the cell-error table --
     # the data-quality channel, reference Rdf/Converter.cs:456-461)
@@ -315,10 +322,6 @@ def build_knowledge_graph(spark: SparkSession, pages: DataFrame, table: Table,
     err_manifest = write_resumable(
         errors, os.path.join(output_dir, "errors"),
         n_buckets=max(n_buckets // 4, 1))
-    # all sinks materialized: release the stage caches (long-running
-    # drivers would otherwise accumulate spilled blocks across jobs)
-    for cached in caches:
-        cached.unpersist()
     return {
         "triples": t_manifest,
         "entities": e_manifest,

@@ -223,7 +223,15 @@ class HadoopFS:
         if self._fs.exists(self._p(p)):
             self._fs.delete(self._p(tmp), False)
             return
-        self._fs.rename(self._p(tmp), self._p(p))
+        if self._fs.rename(self._p(tmp), self._p(p)):
+            return
+        # rename returns false instead of raising. When the target
+        # appeared after the exists probe, another committer won the race
+        # (first-commit-wins, as above); otherwise the commit failed.
+        # Either way the tmp file must not stay beside the manifests.
+        self._fs.delete(self._p(tmp), False)
+        if not self._fs.exists(self._p(p)):
+            raise IOError(f"rename {tmp} -> {p} failed")
 
     def write_text_exclusive(self, p: str, text: str, tmp: str) -> None:
         """First-commit-wins create (see LocalFS): HDFS rename never

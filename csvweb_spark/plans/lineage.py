@@ -11,7 +11,8 @@ metadata instead):
 * output is partitioned by a deterministic `part_key` derived from the
   input (url hash bucket) - NOT by Spark task id, so retries/resumes land
   in the same logical partition;
-* each run writes data files under data/part_key=K/ plus one manifest row
+* each run writes data files under data/part_key=K/ (one file per
+  bucket: rows are hash-clustered by part_key first) plus one manifest row
   per partition (row count, file count, min/max url bounds -- read from the
   written parquet footers, Iceberg-manifest style) into
   _manifests/<run_id>.json, written ONLY after the data write succeeds -
@@ -164,7 +165,13 @@ def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
     manifest also covers it -- the latest manifest's stats are the
     authoritative ones for a partition. (Data time travel is
     commit-VISIBILITY only: overwritten partitions keep the newest files,
-    like an Iceberg table after snapshot expiration.)"""
+    like an Iceberg table after snapshot expiration.)
+
+    Rows are hash-clustered by part_key before the write (a rebalance
+    hint, Iceberg's hash write-distribution), so each bucket is written
+    by one task into one file unless adaptive execution splits a skewed
+    bucket at the advisory partition size. Without it every write task
+    holds rows of every bucket and writes up to n_buckets small files."""
     spark = df.sparkSession
     # uuid suffix (round-3 ADVICE): manifest commits are first-commit-wins
     # on Hadoop filesystems, so the default run_id must be unique even for
@@ -197,7 +204,7 @@ def write_partitioned(df: DataFrame, output_dir: str, url_col: str = "url",
     prev_mode = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, "dynamic")
     try:
-        (keyed.write.mode("overwrite")
+        (keyed.hint("rebalance", "part_key").write.mode("overwrite")
          .partitionBy("part_key")
          .parquet(data_dir))
     finally:

@@ -107,9 +107,8 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
     def process(batch_df, batch_id):
         if batch_hook is not None:
             batch_hook(batch_id, "start")
-        caches: list = []
         canonical, entity_map, _obs, errors = kg_canonical_triples(
-            batch_df, table, aliases, mode=mode, cache_registry=caches)
+            batch_df, table, aliases, mode=mode)
         bdir = fs.join(output_dir, f"batch={batch_id}")
         if shapes is not None:
             from ..operators.shacl import validate_shapes
@@ -121,8 +120,6 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
                             fs.join(bdir, "violations"),
                             n_buckets=max(n_buckets // 4, 1))
             if quarantine_on_violation and n_viol > 0:
-                for cached in caches:
-                    cached.unpersist()
                 return
         write_resumable(canonical, fs.join(bdir, "triples"),
                         n_buckets=n_buckets)
@@ -133,8 +130,6 @@ def stream_knowledge_graph(spark: SparkSession, input_dir: str,
                         n_buckets=max(n_buckets // 4, 1))
         write_resumable(errors, fs.join(bdir, "errors"),
                         n_buckets=max(n_buckets // 4, 1))
-        for cached in caches:
-            cached.unpersist()
 
     writer = (pages.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))

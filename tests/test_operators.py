@@ -984,6 +984,53 @@ def test_choose_n_salts_adaptive(spark):
     assert set(lab2.values()) == {0} and len(lab2) == 301
 
 
+def test_connected_components_skips_salt_probe_under_edge_bound(
+        spark, monkeypatch):
+    """A canonical edge set with at most TARGET_BUCKET edges cannot hold a
+    node of higher degree, so adaptive CC takes one salt without running
+    the choose_n_salts probe - and labels as n_salts=1 does."""
+    import csvweb_spark.operators.canonicalize as cz
+
+    calls = []
+    real = cz.choose_n_salts
+    monkeypatch.setattr(cz, "choose_n_salts",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    star = spark.range(1, 4001).select(
+        F.lit(0).cast("long").alias("src"), F.col("id").alias("dst"))
+    lab = {r.node: r.component
+           for r in cz.connected_components(star).collect()}
+    assert calls == []
+    assert lab == {r.node: r.component
+                   for r in cz.connected_components(star, n_salts=1)
+                   .collect()}
+
+
+def test_connected_components_probes_salts_over_edge_bound(
+        spark, monkeypatch):
+    """With the bucket below the edge count the probe still runs, picks
+    several salts for a hub star, and the salted rounds label as
+    n_salts=1 does."""
+    import csvweb_spark.operators.canonicalize as cz
+
+    picked = []
+    real = cz.choose_n_salts
+
+    def counting(*a, **k):
+        picked.append(real(*a, **k))
+        return picked[-1]
+
+    monkeypatch.setattr(cz, "choose_n_salts", counting)
+    monkeypatch.setattr(cz, "TARGET_BUCKET", 256)
+    star = spark.range(1, 4001).select(
+        F.lit(0).cast("long").alias("src"), F.col("id").alias("dst"))
+    lab = {r.node: r.component
+           for r in cz.connected_components(star).collect()}
+    assert picked and max(picked) > 1
+    assert lab == {r.node: r.component
+                   for r in cz.connected_components(star, n_salts=1)
+                   .collect()}
+
+
 def test_connected_components_long_chain_converges(spark):
     """O(log n) convergence: a 200-node chain must finish within max_iter."""
     from csvweb_spark.operators.canonicalize import connected_components
@@ -1283,6 +1330,52 @@ def test_lineage_protocol_over_hadoop_fs(spark, tmp_path, docs):
         m1["total_rows"]
 
 
+def test_hadoop_fs_commit_rename_failure_drops_tmp(spark, tmp_path):
+    """HadoopFS.write_text_atomic checks rename's result. When another
+    committer creates the target between the exists probe and the rename
+    (which, as on HDFS, then refuses to overwrite), the first commit
+    stays and the tmp file is deleted; a rename that fails with no
+    target raises, also without leaving the tmp file."""
+    import json
+
+    from csvweb_spark.plans.fs import HadoopFS
+
+    base = "file://" + str(tmp_path)
+    fs = HadoopFS(spark, base)
+    real = fs._fs
+
+    class RacingFS:
+        def __init__(self, racer):
+            self.racer = racer
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+        def exists(self, jp):
+            found = real.exists(jp)
+            if self.racer is not None:
+                self.racer()
+                self.racer = None
+            return found
+
+        def rename(self, src, dst):
+            return False if real.exists(dst) else real.rename(src, dst)
+
+    target = tmp_path / "m.json"
+    fs._fs = RacingFS(lambda: target.write_text('{"by": "other"}'))
+    fs.write_text_atomic(fs.join(base, "m.json"), '{"by": "us"}',
+                         fs.join(base, ".m.json.tmp"))
+    assert json.loads(target.read_text()) == {"by": "other"}
+    assert sorted(os.listdir(tmp_path)) == ["m.json"]
+
+    fs._fs = RacingFS(None)
+    fs._fs.rename = lambda src, dst: False
+    with pytest.raises(IOError):
+        fs.write_text_atomic(fs.join(base, "n.json"), "{}",
+                             fs.join(base, ".n.json.tmp"))
+    assert sorted(os.listdir(tmp_path)) == ["m.json"]
+
+
 def test_snapshot_time_travel(spark, tmp_path, docs):
     """Snapshot-isolated reads over the lineage manifests (the
     parquet+manifest analogue of Iceberg VERSION AS OF): uncommitted data
@@ -1376,6 +1469,27 @@ def test_write_partitioned_single_materialization(spark, tmp_path):
         assert p["n_files"] >= 1
         assert p["min_url"].startswith("http://u/")
         assert p["min_url"] <= p["max_url"]
+
+
+def test_write_partitioned_one_file_per_bucket(spark, tmp_path):
+    """Rows are clustered by part_key before the write, so a
+    multi-partition input leaves one parquet file per bucket directory,
+    and each manifest row matches its file's footer."""
+    import pyarrow.parquet as pq
+
+    from csvweb_spark.plans.lineage import write_partitioned
+
+    df = spark.range(0, 400, numPartitions=8).select(
+        F.concat(F.lit("http://u/"), F.col("id")).alias("url"), "id")
+    out = tmp_path / "out"
+    m = write_partitioned(df, str(out), n_buckets=8)
+    assert m["total_rows"] == 400 and len(m["partitions"]) == 8
+    for p in m["partitions"]:
+        pdir = out / "data" / f"part_key={p['part_key']}"
+        files = sorted(pdir.glob("*.parquet"))
+        assert len(files) == 1
+        assert p["n_files"] == 1
+        assert p["rows"] == pq.ParquetFile(files[0]).metadata.num_rows
 
 
 def test_ann_topk_ivf(spark, embeddings):

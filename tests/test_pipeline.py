@@ -168,3 +168,23 @@ def test_pipeline_resume_skips_committed(spark, pages, aliases, tmp_path):
     assert r2["triples"]["total_rows"] == 0
     n2 = spark.read.parquet(os.path.join(out, "triples", "data")).count()
     assert n1 == n2
+
+
+def test_build_knowledge_graph_job_budget(spark, pages, aliases, tmp_path):
+    """Job-count regression guard for stages A-E on the small fixture.
+    48 jobs is the measured count with one entity-map materialization
+    and no CC salt probe on graphs within the salt bucket (69-70 before);
+    a reintroduced recomputation or per-round probe raises it."""
+    from csvweb_spark.pipeline import build_knowledge_graph
+
+    sc = spark.sparkContext
+    group = "kg-job-budget"
+    sc.setJobGroup(group, "build_knowledge_graph job budget")
+    try:
+        result = build_knowledge_graph(spark, pages, _table(), aliases,
+                                       str(tmp_path / "kg"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result["triples"]["total_rows"] == 40 * 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 48
